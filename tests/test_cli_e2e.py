@@ -10,9 +10,13 @@ from __future__ import annotations
 import io
 import json
 
+import pytest
+
 from tests.fixtures import write_tweets_file
 from tweetaggregates_spark import cli
 from tweetaggregates_spark.store import AggregateStore
+
+pytestmark = pytest.mark.soak
 
 
 def _repl_json(monkeypatch, capsys, store_dir, commands):

@@ -3,9 +3,12 @@ and deterministic sampling / splitting / shuffling / packing."""
 
 from __future__ import annotations
 
+import pytest
+from hypothesis import given, settings
+from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
-from tweetaggregates_spark.operators import sampling, similarity
+from tweetaggregates_spark.operators import cluster, sampling, similarity
 from tweetaggregates_spark.operators.cluster import (
     assign_clusters,
     canonical_docs,
@@ -21,39 +24,94 @@ def _pairs(spark, rows):
     return spark.createDataFrame(rows, "doc_a long, doc_b long")
 
 
-def test_connected_components_two_components(spark):
-    labels = connected_components(_pairs(spark, [(1, 2), (2, 3), (5, 6)]))
-    got = {r["node"]: r["cluster_id"] for r in labels.collect()}
-    assert got == {1: 1, 2: 1, 3: 1, 5: 5, 6: 5}
+@pytest.fixture
+def cc_paths(monkeypatch):
+    """Both sides of connected_components' size dispatch: iterating the
+    returned generator runs the loop body first on the driver
+    union-find path, then on the Spark hash-min path (LOCAL_EDGE_LIMIT
+    = -1: no graph fits, not even an empty one)."""
+
+    def paths():
+        yield "local"
+        monkeypatch.setattr(cluster, "LOCAL_EDGE_LIMIT", -1)
+        yield "spark"
+
+    return paths
 
 
-def test_connected_components_chain_converges(spark):
+def test_connected_components_two_components(spark, cc_paths):
+    for path in cc_paths():
+        labels = connected_components(
+            _pairs(spark, [(1, 2), (2, 3), (5, 6)])
+        )
+        got = {r["node"]: r["cluster_id"] for r in labels.collect()}
+        assert got == {1: 1, 2: 1, 3: 1, 5: 5, 6: 5}, path
+
+
+def test_connected_components_chain_converges(spark, cc_paths):
     # a 6-node path (diameter 5) exercises multi-round propagation; the
     # reversed edge order means labels must flow against edge direction
-    labels = connected_components(
-        _pairs(spark, [(5, 6), (4, 5), (3, 4), (2, 3), (1, 2)])
+    for path in cc_paths():
+        labels = connected_components(
+            _pairs(spark, [(5, 6), (4, 5), (3, 4), (2, 3), (1, 2)])
+        )
+        got = {r["node"]: r["cluster_id"] for r in labels.collect()}
+        assert got == {n: 1 for n in range(1, 7)}, path
+
+
+def test_connected_components_empty_graph(spark, cc_paths):
+    for path in cc_paths():
+        labels = connected_components(_pairs(spark, []))
+        assert labels.collect() == [], path
+        assert labels.columns == ["node", "cluster_id"], path
+
+
+@settings(max_examples=6, deadline=None)
+@given(
+    edges=st.lists(
+        st.tuples(st.integers(0, 24), st.integers(0, 24)), max_size=40
+    ),
+    reversed_every=st.integers(1, 4),
+)
+def test_connected_components_paths_agree(spark, edges, reversed_every):
+    """On random graphs with self-loops, duplicate and reversed edges,
+    the driver union-find and the Spark hash-min loop give identical
+    labels."""
+    rows = (
+        edges
+        + edges[::2]  # duplicates
+        + [(b, a) for a, b in edges[::reversed_every]]  # reversed
+        + [(a, a) for a, _ in edges[::3]]  # self-loops
     )
-    got = {r["node"]: r["cluster_id"] for r in labels.collect()}
-    assert got == {n: 1 for n in range(1, 7)}
+    local = sorted(
+        map(tuple, connected_components(_pairs(spark, rows)).collect())
+    )
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(cluster, "LOCAL_EDGE_LIMIT", -1)
+        on_spark = sorted(
+            map(tuple, connected_components(_pairs(spark, rows)).collect())
+        )
+    assert local == on_spark
 
 
-def test_two_phase_matches_hash_min_on_small_graphs(spark):
-    for rows in (
-        [(1, 2), (2, 3), (5, 6)],
-        [(5, 6), (4, 5), (3, 4), (2, 3), (1, 2)],
-        [(10, 20), (20, 10), (7, 7)],  # dup edges + self loop
-    ):
-        want = {
-            r["node"]: r["cluster_id"]
-            for r in connected_components(_pairs(spark, rows)).collect()
-        }
-        got = {
-            r["node"]: r["cluster_id"]
-            for r in connected_components_two_phase(
-                _pairs(spark, rows)
-            ).collect()
-        }
-        assert got == want, rows
+def test_two_phase_matches_hash_min_on_small_graphs(spark, cc_paths):
+    for path in cc_paths():
+        for rows in (
+            [(1, 2), (2, 3), (5, 6)],
+            [(5, 6), (4, 5), (3, 4), (2, 3), (1, 2)],
+            [(10, 20), (20, 10), (7, 7)],  # dup edges + self loop
+        ):
+            want = {
+                r["node"]: r["cluster_id"]
+                for r in connected_components(_pairs(spark, rows)).collect()
+            }
+            got = {
+                r["node"]: r["cluster_id"]
+                for r in connected_components_two_phase(
+                    _pairs(spark, rows)
+                ).collect()
+            }
+            assert got == want, (path, rows)
 
 
 def test_two_phase_chain_10k_converges_in_log_rounds(spark):
@@ -73,28 +131,30 @@ def test_two_phase_chain_10k_converges_in_log_rounds(spark):
     ), "chain did not fully contract to the component min"
 
 
-def test_two_phase_matches_hash_min_on_real_pair_graph(spark):
+def test_two_phase_matches_hash_min_on_real_pair_graph(spark, cc_paths):
     """dedup_clusters_docs parity: on the documents' MinHash-LSH pair
     graph both algorithms must produce identical cluster labels."""
     from tweetaggregates_spark.operators import dedup
 
     docs = load_table(spark, SF0001, "documents").select("doc_id", "text")
     pairs = dedup.minhash_lsh_pairs(docs).select("doc_a", "doc_b")
-    want = {
-        tuple(r) for r in connected_components(pairs).collect()
-    }
     got = {
         tuple(r)
         for r in connected_components_two_phase(pairs).collect()
     }
-    assert got == want
+    for path in cc_paths():
+        want = {
+            tuple(r) for r in connected_components(pairs).collect()
+        }
+        assert got == want, path
 
 
-def test_assign_clusters_includes_singletons(spark):
+def test_assign_clusters_includes_singletons(spark, cc_paths):
     docs = spark.createDataFrame([(i,) for i in range(1, 8)], "doc_id long")
-    out = assign_clusters(docs, _pairs(spark, [(2, 4), (4, 6)]))
-    got = {r["doc_id"]: r["cluster_id"] for r in out.collect()}
-    assert got == {1: 1, 2: 2, 3: 3, 4: 2, 5: 5, 6: 2, 7: 7}
+    for path in cc_paths():
+        out = assign_clusters(docs, _pairs(spark, [(2, 4), (4, 6)]))
+        got = {r["doc_id"]: r["cluster_id"] for r in out.collect()}
+        assert got == {1: 1, 2: 2, 3: 3, 4: 2, 5: 5, 6: 2, 7: 7}, path
 
 
 def test_canonical_docs_keeps_best_quality(spark):

@@ -26,7 +26,11 @@ import datetime
 import json
 import os
 
+import pytest
+
 from tweetaggregates_spark.store import AggregateStore
+
+pytestmark = pytest.mark.soak
 
 BASE = datetime.datetime(2024, 5, 1, 12, 0, 0)
 TOL = datetime.timedelta(seconds=5)

@@ -10,7 +10,7 @@ import os
 
 from pyspark.sql import functions as F
 
-from tweetaggregates_spark.operators import dedup
+from tweetaggregates_spark.operators import cluster, dedup
 from tweetaggregates_spark.sources.tables import load_table
 from tweetaggregates_spark.streaming.dedup import run_streaming_near_dedup
 
@@ -18,6 +18,21 @@ SF = "/root/testdata/sf0.001"
 
 
 def test_stream_near_dedup_matches_one_shot_index(spark, tmp_path):
+    _assert_stream_matches_one_shot_index(spark, tmp_path)
+
+
+def test_stream_near_dedup_spark_components_match_one_shot_index(
+    spark, tmp_path, monkeypatch
+):
+    """The same batching-invariance with every connected-components
+    call on the Spark hash-min path (LOCAL_EDGE_LIMIT = -1: no graph
+    fits, not even an empty one), so the fallback for delta graphs too
+    big for the driver stays covered under streaming."""
+    monkeypatch.setattr(cluster, "LOCAL_EDGE_LIMIT", -1)
+    _assert_stream_matches_one_shot_index(spark, tmp_path)
+
+
+def _assert_stream_matches_one_shot_index(spark, tmp_path) -> None:
     docs = load_table(spark, SF, "documents").select("doc_id", "text")
     rows = sorted(docs.collect(), key=lambda r: r.doc_id)
     n = len(rows)

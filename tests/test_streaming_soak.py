@@ -19,6 +19,8 @@ from tweetaggregates_spark.plans import tweets as tp
 from tweetaggregates_spark.store import AggregateStore
 from tweetaggregates_spark.streaming.pipeline import run_streaming_aggregates
 
+pytestmark = pytest.mark.soak
+
 
 def _sorted_chunks(n_tweets: int, n_chunks: int, seed: int):
     def ts(ln):

@@ -1263,16 +1263,15 @@ def append_band_index_delta(
             f"{path}/counts/v={version}"
         )
 
-    # inheritable_thread_target: this append runs inside streaming
-    # triggers, and plain pool workers would not inherit the streaming
-    # job group/tags under pinned-thread mode (ADVICE r15)
+    # inheritable_thread_target(session): this append runs inside
+    # streaming triggers, and plain pool workers would inherit neither
+    # the streaming job group nor the session's job tags under
+    # pinned-thread mode (ADVICE r15)
     from pyspark import inheritable_thread_target
 
+    inherit = inheritable_thread_target(new_rows.sparkSession)
     with ThreadPoolExecutor(max_workers=2) as pool:
-        for f in [
-            pool.submit(inheritable_thread_target(w))
-            for w in (_w_remap, _w_counts)
-        ]:
+        for f in [pool.submit(inherit(w)) for w in (_w_remap, _w_counts)]:
             f.result()
 
 
@@ -1291,31 +1290,29 @@ def read_band_index_parts(
     (``compact_band_index(bucketed_table=...)``) for the base dir, so
     the corpus-sized side of the join plans with ZERO Exchange, and
     the tiny resolved remap folds onto the join OUTPUT, not the scan."""
-    import os
+    from tweetaggregates_spark import versioned_store as vstore
 
-    from tweetaggregates_spark.versioned_store import base_and_deltas
-
-    base, band_vs = base_and_deltas(path, "base", "bands", below)
-    _, remap_vs = base_and_deltas(path, "base", "remap", below)
+    base, band_vs = vstore.base_and_deltas(path, "base", "bands", below)
+    _, remap_vs = vstore.base_and_deltas(path, "base", "remap", below)
     parts = []
-    if base is not None:
-        if base_table is not None:
-            parts.append(
-                spark.table(base_table).select(
-                    "doc_id", "band_id", "band_key", "cluster"
-                )
+    if base is not None and base_table is not None:
+        parts.append(
+            spark.table(base_table).select(
+                "doc_id", "band_id", "band_key", "cluster"
             )
-        else:
-            parts.append(spark.read.parquet(f"{path}/base/v={base}"))
-    for v in band_vs:
-        parts.append(spark.read.parquet(f"{path}/bands/v={v}"))
+        )
+        base = None  # the catalog mirror stands in for the base dir
+    parts += vstore.read_family(
+        spark, path, "base", "bands", base, band_vs, schema=INDEX_SCHEMA
+    )
 
     if not remap_vs:
         return parts, None
-    logs = [spark.read.parquet(f"{path}/remap/v={v}") for v in remap_vs]
-    log = logs[0]
-    for lg in logs[1:]:
-        log = log.unionByName(lg)
+    log = vstore.union_all(
+        vstore.read_family(
+            spark, path, "base", "remap", None, remap_vs, schema=REMAP_SCHEMA
+        )
+    )
     # chain resolution: old->mid (v_i), mid->new (v_j>i) folds to
     # old->new; one hop per extra remap version suffices because each
     # version's entries already point at that ingest's FINAL labels
@@ -1375,19 +1372,20 @@ def read_bucket_counts(
     and the fold is one groupBy over O(buckets) rows, never a corpus
     aggregation."""
 
-    from tweetaggregates_spark.versioned_store import base_and_deltas
+    from tweetaggregates_spark import versioned_store as vstore
 
-    base, band_vs = base_and_deltas(path, "base", "bands", below)
+    base, band_vs = vstore.base_and_deltas(path, "base", "bands", below)
     needed = ([base] if base is not None else []) + band_vs
     if not needed:
         return spark.createDataFrame([], COUNTS_SCHEMA)
     have = set(_versions(f"{path}/counts"))
     if any(v not in have for v in needed):
         return None
-    out = None
-    for v in needed:
-        part = spark.read.parquet(f"{path}/counts/v={v}")
-        out = part if out is None else out.unionByName(part)
+    out = vstore.union_all(
+        vstore.read_family(
+            spark, path, "base", "counts", None, needed, schema=COUNTS_SCHEMA
+        )
+    )
     return out.groupBy("band_id", "band_key").agg(
         F.sum("n_rows").alias("n_rows")
     )
@@ -1582,9 +1580,10 @@ def compact_band_index(
     )
     # the base's bucket counts (a crash before this write just makes
     # read_bucket_counts return None and callers re-count)
-    bucket_counts(spark.read.parquet(target)).write.mode(
-        "overwrite"
-    ).parquet(f"{path}/counts/v={newv}")
+    out = spark.read.schema(INDEX_SCHEMA).parquet(target)
+    bucket_counts(out).write.mode("overwrite").parquet(
+        f"{path}/counts/v={newv}"
+    )
 
     if q_merged is not None:
         import re
@@ -1603,7 +1602,6 @@ def compact_band_index(
         for d in batch_dirs:
             shutil.rmtree(f"{quarantine_path}/{d}", ignore_errors=True)
         os.rename(qtmp, f"{quarantine_path}/batch_id={maxbatch}")
-    out = spark.read.parquet(target)
     if bucketed_table is not None:
         write_band_index_bucketed(out, bucketed_table, n_buckets)
     return out

@@ -145,7 +145,9 @@ def run_streaming_near_dedup(
                     f"{out_path}_quarantine/batch_id={batch_id}"
                 )
 
-        _run_write_branches(pool_size=2, branches=(_w_index, _w_out))
+        _run_write_branches(
+            spark, pool_size=2, branches=(_w_index, _w_out)
+        )
 
     from tweetaggregates_spark.streaming.runner import run_foreach_batch
 
@@ -155,27 +157,28 @@ def run_streaming_near_dedup(
     )
 
 
-def _run_write_branches(pool_size: int, branches) -> None:
+def _run_write_branches(
+    spark: SparkSession, pool_size: int, branches
+) -> None:
     """Run the per-trigger write branches on a small pool (guide
-    §2.6). Each branch is wrapped in ``inheritable_thread_target`` so
-    that, under PySpark pinned-thread mode, the worker inherits the
-    parent's JVM thread-local properties — streaming job group/tags —
-    and ``StreamingQuery.stop()`` can cancel in-flight branch writes
-    and the UI attributes them to the query (ADVICE r15). Failure
-    semantics (ADVICE r15, noted trade): when one branch raises, the
-    sibling write is NOT cancelled — the pool joins it before the
-    trigger fails. Results stay correct (every write is a
-    per-version/batch-dir overwrite, so replay overwrites both
-    outputs); the only cost is a delayed failure, and cancelling a
-    running Spark job mid-write buys nothing safer."""
+    §2.6). Each branch is wrapped in ``inheritable_thread_target(spark)``
+    so that, under PySpark pinned-thread mode, the worker inherits the
+    parent's JVM thread-local properties (the streaming job group) and
+    the session's job tags; ``StreamingQuery.stop()`` can then cancel
+    in-flight branch writes and the UI attributes them to the query
+    (ADVICE r15). Failure semantics (ADVICE r15, noted trade): when
+    one branch raises, the sibling write is NOT cancelled — the pool
+    joins it before the trigger fails. Results stay correct (every
+    write is a per-version/batch-dir overwrite, so replay overwrites
+    both outputs); the only cost is a delayed failure, and cancelling
+    a running Spark job mid-write buys nothing safer."""
     from concurrent.futures import ThreadPoolExecutor
 
     from pyspark import inheritable_thread_target
 
+    inherit = inheritable_thread_target(spark)
     with ThreadPoolExecutor(max_workers=pool_size) as pool:
-        for f in [
-            pool.submit(inheritable_thread_target(w)) for w in branches
-        ]:
+        for f in [pool.submit(inherit(w)) for w in branches]:
             f.result()
 
 
@@ -279,7 +282,9 @@ def run_streaming_exact_dedup(
                 f"{out_path}/batch_id={batch_id}"
             )
 
-        _run_write_branches(pool_size=2, branches=(_w_index, _w_out))
+        _run_write_branches(
+            spark, pool_size=2, branches=(_w_index, _w_out)
+        )
 
     from tweetaggregates_spark.streaming.runner import run_foreach_batch
 
@@ -530,7 +535,9 @@ def run_streaming_split_routing(
                 f"{out_path}/batch_id={batch_id}"
             )
 
-        _run_write_branches(pool_size=2, branches=(_w_index, _w_routing))
+        _run_write_branches(
+            spark, pool_size=2, branches=(_w_index, _w_routing)
+        )
 
     from tweetaggregates_spark.streaming.runner import run_foreach_batch
 
